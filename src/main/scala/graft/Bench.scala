@@ -94,10 +94,11 @@ object Bench {
     // sbt prefixes stdout with "[info] ", which can defeat line-oriented
     // JSON parsing downstream — also drop the bare line in a file.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    val written = scala.util.Try(java.nio.file.Files.write(
+      java.nio.file.Paths.get(outPath), (line + "\n").getBytes("UTF-8")))
+    written.failed.foreach(e =>
+      System.err.println(s"[bench] could not write $outPath: $e"))
     spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    if (failed.nonEmpty || written.isFailure) sys.exit(1)
   }
 }

@@ -1,8 +1,8 @@
 package graft.llmops
 
 import graft.QuerySpec
-import graft.llmops.Checkpoints.{obsLong, obsRows, Stageable}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import graft.llmops.Checkpoints.{probe, Round, Stageable}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -166,49 +166,38 @@ object BpeTokenizer {
   }
 
   /** Run the training loop: returns (merge table with 1-based `round`,
-    * final symbol table). Per-round state checkpoint ledger mirrors the
-    * suffix-array loop: each round's symbol table is staged and its
-    * predecessor released. The round's winner is selected INSIDE the
-    * rewrite's own execution (the TopN relation joins the rewrite as a
-    * broadcast subtree) and its one row is read back as OBSERVED METRICS
-    * off the round's checkpoint job — ONE execution per round instead of
-    * the r20 shape's two (winner collect + rewrite checkpoint), the same
-    * probe-fusing as the suffix-array loops (r21; guide §2.4 fewer
-    * barriers). The merge table is reconstructed on the driver from the
-    * per-round observations, so it stays a local relation and the loop
-    * still retains ZERO winner checkpoints. */
+    * final symbol table). Each round's symbol table is staged and its
+    * predecessor released ([[Checkpoints.rounds]]). The round's winner is
+    * selected INSIDE the rewrite's own execution (the TopN relation joins
+    * the rewrite as a broadcast subtree) and its one row is read back as
+    * the probe of the round's staging job — ONE execution per round, not
+    * a winner collect plus a rewrite checkpoint. The merge table is
+    * reconstructed on the driver from the per-round probes, so it stays a
+    * local relation and the loop retains ZERO winner checkpoints. */
   private[graft] def trainMerges(sp: SparkSession,
                                  rounds: Int = Merges): (DataFrame, DataFrame) = {
     import sp.implicits._
-    var syms = seedSyms(sp).staged
     val merges = Seq.newBuilder[(Long, String, String, Long)]
-    var k = 0
-    var exhausted = false
-    while (k < rounds && !exhausted) {
+    val syms = Checkpoints.rounds(seedSyms(sp).staged, rounds)(Seq(_)) {
+        (syms, k) =>
       // NOT staged: the lead() window re-evaluates in the rewrite's own
       // word-partitioned sort (same partition key, one pipeline), so
       // re-deriving it from the checkpointed symbol table is cheaper
-      // than a third per-round materialization (r20). The winner's
-      // pairCounts subtree re-derives it once more on the broadcast side
-      // of the SAME execution — the same two reads of the checkpoint the
-      // two-execution shape paid, minus one driver barrier.
+      // than a third per-round materialization. The winner's pairCounts
+      // subtree re-derives it once more on the broadcast side of the
+      // SAME execution.
       val next = withNext(syms)
-      val obs = Observation()
-      val winner = roundWinner(next)
-        .observe(obs, max(col("l")).as("__l"), max(col("r")).as("__r"),
-          max(col("pair_freq")).as("__f"), count(lit(1)).as("__n"))
-      val rewritten = rewrite(next, winner).staged
-      if (obsLong(obs, "__n", 0L) == 0L) {
+      val winner = probe(roundWinner(next), max(col("l")).as("l"),
+        max(col("r")).as("r"), max(col("pair_freq")).as("f"),
+        count(lit(1)).as("n"))
+      Round[DataFrame](rewrite(next, winner)) { (rewritten, p) =>
         // no adjacent pair anywhere: the rewrite was an identity copy —
-        // release it, keep the previous state, record no merge
-        Checkpoints.unpersist(rewritten)
-        exhausted = true
-      } else {
-        merges += ((k + 1L, obs.get("__l").toString,
-          obs.get("__r").toString, obsLong(obs, "__f", 0L)))
-        Checkpoints.unpersist(syms) // rewritten is eager; input is dead
-        syms = rewritten
-        k += 1
+        // keep the previous state and record no merge
+        if (p("n", 0L) == 0L) (syms, false)
+        else {
+          merges += ((k + 1L, p("l", ""), p("r", ""), p("f", 0L)))
+          (rewritten, true)
+        }
       }
     }
     val mergeTable = merges.result()
@@ -466,42 +455,44 @@ object BpeTokenizer {
       sp: SparkSession, rounds: Int = BatchRounds, m: Int = BatchM,
       pool: Int = BatchPool): (DataFrame, DataFrame) = {
     import sp.implicits._
-    var syms = seedSyms(sp).staged
     val merges = Seq.newBuilder[(Long, Long, String, String, Long)]
-    var k = 0
-    var exhausted = false
-    while (k < rounds && !exhausted) {
+    val syms = Checkpoints.rounds(seedSyms(sp).staged, rounds)(Seq(_)) {
+        (syms, k) =>
       // NOT staged — same one-materialization-per-round ledger as
       // [[trainMerges]]: the batch selection and the rewrite each derive
       // the lead() column from the checkpointed symbol table in their
       // own (already word-sorted) pipeline, within ONE execution.
       val next = withNext(syms)
       // the ≤ m-row batch is selected inside the rewrite's execution
-      // (broadcast subtree) and read back as ONE observed collect_list
-      // metric — no separate winner-collect execution per round (r21)
-      val obs = Observation()
-      val winners = batchWinners(next, m, pool)
-        .observe(obs, collect_list(struct(col("brk"), col("l"), col("r"),
-          col("pair_freq"))).as("__ws"))
-      val rewritten = rewrite(next, winners).staged
-      // collect_list order is nondeterministic — brk restores batch rank
-      val win = obsRows(obs, "__ws").sortBy(_.getAs[Long]("brk"))
-      if (win.isEmpty) {
-        Checkpoints.unpersist(rewritten) // identity copy; keep prior state
-        exhausted = true
-      } else {
-        merges ++= win.map(w => (k + 1L, w.getAs[Long]("brk"),
-          w.getAs[String]("l"), w.getAs[String]("r"),
-          w.getAs[Long]("pair_freq")))
-        Checkpoints.unpersist(syms) // rewritten is eager; input is dead
-        syms = rewritten
-        k += 1
+      // (broadcast subtree) and read back as ONE collect_list probe
+      val winners = probe(batchWinners(next, m, pool), batchProbe)
+      Round[DataFrame](rewrite(next, winners)) { (rewritten, p) =>
+        val win = batchOf(p)
+        if (win.isEmpty) (syms, false) // identity copy; keep prior state
+        else {
+          merges ++= win.map { case (brk, l, r, f) => (k + 1L, brk, l, r, f) }
+          (rewritten, true)
+        }
       }
     }
     val mergeTable = merges.result()
       .toDF("round", "brk", "l", "r", "pair_freq")
     (mergeTable, syms)
   }
+
+  /** The probe that carries a round's winner batch off its staging job. */
+  private def batchProbe =
+    collect_list(struct(col("brk"), col("l"), col("r"), col("pair_freq")))
+      .as("ws")
+
+  /** The winner batch ([[batchProbe]]) as (brk, l, r, pair_freq) in batch
+    * rank order — collect_list order is nondeterministic, brk restores
+    * it; empty when no pair was left. */
+  private def batchOf(p: Checkpoints.Probes): Seq[(Long, String, String, Long)] =
+    p[scala.collection.Seq[Row]]("ws", Nil).toSeq
+      .map(w => (w.getAs[Long]("brk"), w.getAs[String]("l"),
+        w.getAs[String]("r"), w.getAs[Long]("pair_freq")))
+      .sortBy(_._1)
 
   // ---------------------------------------------------------------------
   // q416 — the INCREMENTAL trainer: the pair-count relation is staged
@@ -571,59 +562,49 @@ object BpeTokenizer {
     // neighbour-attached table (`next`). The bare symbol table is a
     // projection of it, so staging both (the trainMergesBatched ledger)
     // would checkpoint the same rows twice per round.
-    var next = withNext(seedSyms(sp)).staged
-    var counts = pairCounts(next).staged // the maintained relation
+    val next0 = withNext(seedSyms(sp)).staged
     val merges = Seq.newBuilder[(Long, Long, String, String, Long)]
-    var k = 0
-    var exhausted = false
-    while (k < rounds && !exhausted) {
+    // state: (next, the maintained pair counts); a round stages the
+    // marked relation (the −delta AND the rewrite read it), then the
+    // new state — the marked relation is released with the old state
+    type State = (DataFrame, DataFrame)
+    val (next, counts) = Checkpoints.rounds[State](
+        (next0, pairCounts(next0).staged), rounds)(s => Seq(s._1, s._2)) {
+        case ((next, counts), k) =>
       // batch selected inside the marked relation's execution (broadcast
-      // subtree over the staged counts) and read back as one observed
-      // metric — no separate winner-collect execution per round (r21)
-      val obs = Observation()
-      val winners = batchWinnersFromCounts(counts, m, pool)
-        .observe(obs, collect_list(struct(col("brk"), col("l"), col("r"),
-          col("pair_freq"))).as("__ws"))
-      val marked = mark(next, winners)
-        .withColumn("touched",
-          max(col("cand")).over(Window.partitionBy(col("word"))))
-        .staged // the −delta AND the rewrite read it
-      val win = obsRows(obs, "__ws").sortBy(_.getAs[Long]("brk"))
-      if (win.isEmpty) {
-        Checkpoints.unpersist(marked) // no winner: round never happened
-        exhausted = true
-      } else {
-        merges ++= win.map(w => (k + 1L, w.getAs[Long]("brk"),
-          w.getAs[String]("l"), w.getAs[String]("r"),
-          w.getAs[Long]("pair_freq")))
-        // −delta: every adjacent pair of the words the batch will
-        // rewrite, at round-START state
-        val negd = marked
-          .filter(col("touched") === 1L && col("nxt").isNotNull)
-          .groupBy(col("sym"), col("nxt"))
-          .agg((-sum(col("freq"))).as("pair_freq"))
-          .select(col("sym").as("l"), col("nxt").as("r"), col("pair_freq"))
-        val next2 = withNext(rewriteMarked(marked, carry = Seq("touched")))
-          .staged // the +delta AND the next round both read it
-        // +delta: the same words' pairs AFTER the rewrite
-        val posd = next2
-          .filter(col("touched") === 1L && col("nxt").isNotNull)
-          .groupBy(col("sym"), col("nxt"))
-          .agg(sum(col("freq")).as("pair_freq"))
-          .select(col("sym").as("l"), col("nxt").as("r"), col("pair_freq"))
-        // pair-grain merge; a pair whose count reaches 0 drops out (it
-        // re-enters as a fresh row if a later round recreates it)
-        val counts2 = counts.unionByName(negd).unionByName(posd)
-          .groupBy(col("l"), col("r"))
-          .agg(sum(col("pair_freq")).as("pair_freq"))
-          .filter(col("pair_freq") > 0)
-          .staged
-        Checkpoints.unpersist(marked)
-        Checkpoints.unpersist(next)
-        Checkpoints.unpersist(counts)
-        next = next2
-        counts = counts2
-        k += 1
+      // subtree over the staged counts) and read back as one probe
+      val winners = probe(batchWinnersFromCounts(counts, m, pool), batchProbe)
+      Round[State](mark(next, winners).withColumn("touched",
+          max(col("cand")).over(Window.partitionBy(col("word"))))) {
+          (marked, p) =>
+        val win = batchOf(p)
+        if (win.isEmpty) ((next, counts), false) // round never happened
+        else {
+          merges ++= win.map { case (brk, l, r, f) => (k + 1L, brk, l, r, f) }
+          // −delta: every adjacent pair of the words the batch will
+          // rewrite, at round-START state
+          val negd = marked
+            .filter(col("touched") === 1L && col("nxt").isNotNull)
+            .groupBy(col("sym"), col("nxt"))
+            .agg((-sum(col("freq"))).as("pair_freq"))
+            .select(col("sym").as("l"), col("nxt").as("r"), col("pair_freq"))
+          val next2 = withNext(rewriteMarked(marked, carry = Seq("touched")))
+            .staged // the +delta AND the next round both read it
+          // +delta: the same words' pairs AFTER the rewrite
+          val posd = next2
+            .filter(col("touched") === 1L && col("nxt").isNotNull)
+            .groupBy(col("sym"), col("nxt"))
+            .agg(sum(col("freq")).as("pair_freq"))
+            .select(col("sym").as("l"), col("nxt").as("r"), col("pair_freq"))
+          // pair-grain merge; a pair whose count reaches 0 drops out (it
+          // re-enters as a fresh row if a later round recreates it)
+          val counts2 = counts.unionByName(negd).unionByName(posd)
+            .groupBy(col("l"), col("r"))
+            .agg(sum(col("pair_freq")).as("pair_freq"))
+            .filter(col("pair_freq") > 0)
+            .staged
+          ((next2, counts2), true)
+        }
       }
     }
     val mergeTable = merges.result()

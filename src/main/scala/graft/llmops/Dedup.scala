@@ -727,10 +727,6 @@ object Dedup {
       .orderBy(col("vec_id"))
   }
 
-  /** See [[Checkpoints.unpersist]] — shared by every fixpoint loop. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    Checkpoints.unpersist(df)
-
   /** Connected components by min-label propagation WITH POINTER DOUBLING,
     * iterated to fixpoint: each round every node adopts the smallest of
     * (its own label, its neighbors' labels, its label's label). The
@@ -745,24 +741,22 @@ object Dedup {
     * components, and the loop still stops only when a round changes zero
     * labels (a fixed round count would silently under-merge). Two joins
     * + one groupBy per round plus an O(1)-result convergence probe;
-    * labels are localCheckpoint-ed so lineage stays flat, and each
-    * round's superseded checkpoint is unpersisted once the next one is
-    * materialized, so block-manager storage stays O(1) in the round
-    * count. */
+    * labels are staged per round ([[Checkpoints.rounds]]) so lineage
+    * stays flat and the superseded round is released, so block-manager
+    * storage stays O(1) in the round count. */
   def connectedComponents(edges: DataFrame): DataFrame =
     connectedComponentsWithRounds(edges)._1
 
   /** [[connectedComponents]] plus the number of rounds the fixpoint loop
     * ran — exposed so tests can pin the O(log diameter) bound. */
   def connectedComponentsWithRounds(edges: DataFrame): (DataFrame, Int) = {
-    var labels = edges.select(col("src").as("doc_id"), col("src").as("cluster"))
+    val labels0 = edges.select(col("src").as("doc_id"), col("src").as("cluster"))
       .unionAll(edges.select(col("dst").as("doc_id"), col("dst").as("cluster")))
       .groupBy("doc_id").agg(min("cluster").as("cluster"))
       .staged
-    var converged = false
     var rounds = 0
-    while (!converged) {
-      rounds += 1
+    val labels = Checkpoints.rounds(labels0, Int.MaxValue)(Seq(_)) { (labels, i) =>
+      rounds = i + 1
       val viaNeighbor = edges
         .join(labels.withColumnRenamed("doc_id", "dst"), Seq("dst"))
         .select(col("src").as("doc_id"), col("cluster"))
@@ -772,15 +766,13 @@ object Dedup {
         .join(labels.select(col("doc_id").as("cluster"),
           col("cluster").as("grand")), Seq("cluster"))
         .select(col("doc_id"), col("grand").as("cluster"))
-      val next = labels.unionAll(viaNeighbor).unionAll(viaParent)
-        .groupBy("doc_id").agg(min("cluster").as("cluster"))
-        .staged
-      converged = next
-        .join(labels.withColumnRenamed("cluster", "prev"), Seq("doc_id"))
-        .filter(col("cluster") =!= col("prev"))
-        .isEmpty
-      unpersistCheckpoint(labels)
-      labels = next
+      Checkpoints.Round[DataFrame](labels.unionAll(viaNeighbor).unionAll(viaParent)
+          .groupBy("doc_id").agg(min("cluster").as("cluster"))) { (next, _) =>
+        (next, !next
+          .join(labels.withColumnRenamed("cluster", "prev"), Seq("doc_id"))
+          .filter(col("cluster") =!= col("prev"))
+          .isEmpty)
+      }
     }
     (labels, rounds)
   }
@@ -1265,10 +1257,10 @@ object Dedup {
     * discipline applied to an iterative numeric kernel).
     *
     * Scale shape: 3 rounds, each one edge-keyed shuffle (contribution
-    * sum) plus a node-keyed left join; rank state is checkpointed per
-    * round (lineage stays O(1), superseded state released — the q79
-    * recipe). Isolated nodes never enter the edge join and cost
-    * nothing beyond the teleport constant. */
+    * sum) plus a node-keyed left join; rank state is staged per round
+    * (lineage stays O(1), superseded state released —
+    * [[Checkpoints.fixedRounds]]). Isolated nodes never enter the edge
+    * join and cost nothing beyond the teleport constant. */
   val q215PageRank: QuerySpec = {
     def iterSql(prev: String): String =
       s"""SELECT n.doc_id,
@@ -1301,36 +1293,24 @@ object Dedup {
         .unionByName(pairs.select(col("doc_id_b").as("src"), col("doc_id_a").as("dst")))
         .staged
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("dg"))
-      var pr = nodes.select(col("doc_id"), lit(1000000L).as("pr"))
-      for (_ <- 1 to 3) {
+      val pr = Checkpoints.fixedRounds(
+          nodes.select(col("doc_id"), lit(1000000L).as("pr")), 3) { pr =>
         val contrib = pr.join(deg, pr("doc_id") === deg("src"))
           .select(col("src"), expr("pr DIV dg").as("c"))
           .join(edges, Seq("src"))
           .groupBy(col("dst")).agg(sum(col("c")).as("ss"))
-        pr = nodes.join(contrib, nodes("doc_id") === contrib("dst"), "left")
+        nodes.join(contrib, nodes("doc_id") === contrib("dst"), "left")
           .select(col("doc_id"),
             (lit(150000L) + expr("(85 * coalesce(ss, 0L)) DIV 100")).as("pr"))
-          .staged
       }
       pr.orderBy(col("pr").desc, col("doc_id")).limit(20)
         .select(col("doc_id"), col("pr").as("pr_e6"))
     }
   }
 
-  /** Two-round synchronous label propagation over the near-dup graph —
-    * the semi-supervised step that spreads a small set of trusted
-    * source labels (here: every 3rd doc seeds its own `source`) to
-    * unlabeled neighbors by majority vote, the cheap cluster-labeling
-    * pass curation uses between CC ([[q79DedupClusters]]) and a real
-    * classifier. SYNCHRONOUS rounds + a total-order vote (count DESC,
-    * label ASC) make the fixpoint deterministic at any parallelism —
-    * asynchronous LPA is famously order-dependent; this one is
-    * replayed round-for-round by the oracle. Scale shape: each round
-    * is one edge-keyed shuffle (votes) + a rank window keyed on the
-    * destination node (group = candidate labels, bounded by label
-    * cardinality); label state checkpoints per round with the q79
-    * superseded-state release. */
-  val q220LabelPropagation: QuerySpec = {
+  /** The oracle side of [[labelProp]]: `WITH` the near-dup CTEs, `edges`
+    * and the label rounds l0, l1 and l2, replayed round for round. */
+  private val labelPropOracleCtes: String = {
     def roundSql(prev: String): String =
       s"""SELECT doc_id, label FROM $prev
          |  UNION ALL
@@ -1343,42 +1323,67 @@ object Dedup {
          |    WHERE NOT EXISTS (SELECT 1 FROM $prev p WHERE p.doc_id = e.dst)
          |    GROUP BY e.dst, l.label) v
          |  WHERE rn = 1""".stripMargin
-    QuerySpec(
-      "q220_graph_label_prop",
-      s"""WITH $nearDupOracleCtes,
-         |edges AS (SELECT doc_id_a AS src, doc_id_b AS dst FROM np
-         |          UNION ALL SELECT doc_id_b, doc_id_a FROM np),
-         |l0 AS (SELECT doc_id, source AS label FROM documents
-         |       WHERE doc_id % 3 = 0),
-         |l1 AS (${roundSql("l0")}),
-         |l2 AS (${roundSql("l1")})
-         |SELECT doc_id, label FROM l2 ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val sp = QuerySpec.prepared(s, dir)
-      val pairs = nearDupJaccard(sp)
-        .select(col("doc_id_a"), col("doc_id_b")).staged
-      val edges = pairs.select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-        .unionByName(pairs.select(col("doc_id_b").as("src"), col("doc_id_a").as("dst")))
-        .staged
-      var labels = sp.table("documents")
-        .filter(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("source").as("label"))
-        .staged
-      for (_ <- 1 to 2) {
-        val votes = edges
-          .join(labels.select(col("doc_id").as("src"), col("label")), "src")
-          .join(labels.select(col("doc_id").as("dst")), Seq("dst"), "left_anti")
-          .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
-        val win = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("dst")).orderBy(col("c").desc, col("label"))
-        val adopted = votes
-          .withColumn("rn", row_number().over(win))
-          .filter(col("rn") === 1)
-          .select(col("dst").as("doc_id"), col("label"))
-        val next = labels.unionByName(adopted).staged
-        labels = next
-      }
-      labels.orderBy(col("doc_id"))
+    s"""WITH $nearDupOracleCtes,
+       |edges AS (SELECT doc_id_a AS src, doc_id_b AS dst FROM np
+       |          UNION ALL SELECT doc_id_b, doc_id_a FROM np),
+       |l0 AS (SELECT doc_id, source AS label FROM documents
+       |       WHERE doc_id % 3 = 0),
+       |l1 AS (${roundSql("l0")}),
+       |l2 AS (${roundSql("l1")})""".stripMargin
+  }
+
+  /** The near-dup graph's undirected edges `(src, dst)` (both directions,
+    * staged) and its two-round label propagation from every 3rd doc's
+    * `source` ([[q220LabelPropagation]]). */
+  private def labelProp(sp: SparkSession): (DataFrame, DataFrame) = {
+    val pairs = nearDupJaccard(sp)
+      .select(col("doc_id_a"), col("doc_id_b")).staged
+    val edges = pairs.select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
+      .unionByName(pairs.select(col("doc_id_b").as("src"), col("doc_id_a").as("dst")))
+      .staged
+    (edges, propagateLabels(edges, sp.table("documents")
+      .filter(col("doc_id") % 3 === 0)
+      .select(col("doc_id"), col("source").as("label"))
+      .staged))
+  }
+
+  /** Two synchronous label-propagation rounds over `edges (src, dst)`
+    * from `labels0 (doc_id, label)`: each unlabeled node adopts the
+    * label most of its labeled neighbours carry (ties to the smaller
+    * label); labeled nodes keep theirs. */
+  private[graft] def propagateLabels(edges: DataFrame,
+                                     labels0: DataFrame): DataFrame =
+    Checkpoints.fixedRounds(labels0, 2) { labels =>
+      val votes = edges
+        .join(labels.select(col("doc_id").as("src"), col("label")), "src")
+        .join(labels.select(col("doc_id").as("dst")), Seq("dst"), "left_anti")
+        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
+      val win = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("dst")).orderBy(col("c").desc, col("label"))
+      labels.unionByName(votes
+        .withColumn("rn", row_number().over(win))
+        .filter(col("rn") === 1)
+        .select(col("dst").as("doc_id"), col("label")))
     }
+
+  /** Two-round synchronous label propagation over the near-dup graph —
+    * the semi-supervised step that spreads a small set of trusted
+    * source labels (here: every 3rd doc seeds its own `source`) to
+    * unlabeled neighbors by majority vote, the cheap cluster-labeling
+    * pass curation uses between CC ([[q79DedupClusters]]) and a real
+    * classifier. SYNCHRONOUS rounds + a total-order vote (count DESC,
+    * label ASC) make the fixpoint deterministic at any parallelism —
+    * asynchronous LPA is famously order-dependent; this one is
+    * replayed round-for-round by the oracle. Scale shape: each round
+    * is one edge-keyed shuffle (votes) + a rank window keyed on the
+    * destination node (group = candidate labels, bounded by label
+    * cardinality); label state is staged per round and the superseded
+    * round released ([[propagateLabels]]). */
+  val q220LabelPropagation: QuerySpec = QuerySpec(
+    "q220_graph_label_prop",
+    s"""$labelPropOracleCtes
+       |SELECT doc_id, label FROM l2 ORDER BY doc_id""".stripMargin) { (s, dir) =>
+    labelProp(QuerySpec.prepared(s, dir))._2.orderBy(col("doc_id"))
   }
 
   /** Orients canonical (a<b) undirected edges from the LOWER-degree
@@ -1487,96 +1492,54 @@ object Dedup {
     * community + the global Q as the INTEGER sum of the per-community
     * micro-unit terms (rounding before the windowed total keeps the
     * cross-engine sum order out of the result — the q205 ulp rule). */
-  val q244Modularity: QuerySpec = {
-    def roundSql(prev: String): String =
-      s"""SELECT doc_id, label FROM $prev
-         |  UNION ALL
-         |  SELECT dst AS doc_id, label FROM (
-         |    SELECT e.dst, l.label,
-         |           ROW_NUMBER() OVER (PARTITION BY e.dst
-         |             ORDER BY COUNT(*) DESC, l.label) AS rn
-         |    FROM edges e
-         |    JOIN $prev l ON l.doc_id = e.src
-         |    WHERE NOT EXISTS (SELECT 1 FROM $prev p WHERE p.doc_id = e.dst)
-         |    GROUP BY e.dst, l.label) v
-         |  WHERE rn = 1""".stripMargin
-    QuerySpec(
-      "q244_graph_modularity",
-      s"""WITH $nearDupOracleCtes,
-         |edges AS (SELECT doc_id_a AS src, doc_id_b AS dst FROM np
-         |          UNION ALL SELECT doc_id_b, doc_id_a FROM np),
-         |l0 AS (SELECT doc_id, source AS label FROM documents
-         |       WHERE doc_id % 3 = 0),
-         |l1 AS (${roundSql("l0")}),
-         |l2 AS (${roundSql("l1")}),
-         |m AS (SELECT COUNT(*) / 2 AS m FROM edges),
-         |intra AS (
-         |  SELECT la.label, COUNT(*) / 2 AS e_c
-         |  FROM edges e
-         |  JOIN l2 la ON la.doc_id = e.src
-         |  JOIN l2 lb ON lb.doc_id = e.dst AND lb.label = la.label
-         |  GROUP BY la.label),
-         |deg AS (
-         |  SELECT l2.label, COUNT(*) AS d_c
-         |  FROM edges e JOIN l2 ON l2.doc_id = e.src
-         |  GROUP BY l2.label)
-         |SELECT deg.label, CAST(deg.d_c AS BIGINT) AS degree_sum,
-         |  CAST(COALESCE(intra.e_c, 0) AS BIGINT) AS intra_edges,
-         |  CAST(ROUND((CAST(COALESCE(intra.e_c, 0) AS DOUBLE) / m.m
-         |      - (CAST(deg.d_c AS DOUBLE) / (2 * m.m))
-         |        * (CAST(deg.d_c AS DOUBLE) / (2 * m.m))) * 1e6) AS BIGINT) AS q_c_e6,
+  val q244Modularity: QuerySpec = QuerySpec(
+    "q244_graph_modularity",
+    s"""$labelPropOracleCtes,
+       |m AS (SELECT COUNT(*) / 2 AS m FROM edges),
+       |intra AS (
+       |  SELECT la.label, COUNT(*) / 2 AS e_c
+       |  FROM edges e
+       |  JOIN l2 la ON la.doc_id = e.src
+       |  JOIN l2 lb ON lb.doc_id = e.dst AND lb.label = la.label
+       |  GROUP BY la.label),
+       |deg AS (
+       |  SELECT l2.label, COUNT(*) AS d_c
+       |  FROM edges e JOIN l2 ON l2.doc_id = e.src
+       |  GROUP BY l2.label)
+       |SELECT deg.label, CAST(deg.d_c AS BIGINT) AS degree_sum,
+       |  CAST(COALESCE(intra.e_c, 0) AS BIGINT) AS intra_edges,
+       |  CAST(ROUND((CAST(COALESCE(intra.e_c, 0) AS DOUBLE) / m.m
+       |      - (CAST(deg.d_c AS DOUBLE) / (2 * m.m))
+       |        * (CAST(deg.d_c AS DOUBLE) / (2 * m.m))) * 1e6) AS BIGINT) AS q_c_e6,
   CAST(SUM(CAST(ROUND((CAST(COALESCE(intra.e_c, 0) AS DOUBLE) / m.m
-         |      - (CAST(deg.d_c AS DOUBLE) / (2 * m.m))
-         |        * (CAST(deg.d_c AS DOUBLE) / (2 * m.m))) * 1e6) AS BIGINT)) OVER ()
-         |    AS BIGINT) AS modularity_e6
-         |FROM deg LEFT JOIN intra ON deg.label = intra.label CROSS JOIN m
-         |ORDER BY deg.label""".stripMargin) { (s, dir) =>
-      val sp = QuerySpec.prepared(s, dir)
-      val pairs = nearDupJaccard(sp)
-        .select(col("doc_id_a"), col("doc_id_b")).staged
-      val edges = pairs.select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-        .unionByName(pairs.select(col("doc_id_b").as("src"), col("doc_id_a").as("dst")))
-        .staged
-      var labels = sp.table("documents")
-        .filter(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("source").as("label"))
-        .staged
-      for (_ <- 1 to 2) {
-        val votes = edges
-          .join(labels.select(col("doc_id").as("src"), col("label")), "src")
-          .join(labels.select(col("doc_id").as("dst")), Seq("dst"), "left_anti")
-          .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
-        val win = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("dst")).orderBy(col("c").desc, col("label"))
-        val adopted = votes
-          .withColumn("rn", row_number().over(win))
-          .filter(col("rn") === 1)
-          .select(col("dst").as("doc_id"), col("label"))
-        labels = labels.unionByName(adopted).staged
-      }
-      val mDf = edges.agg((count(lit(1)) / 2).as("m"))
-      val la = labels.select(col("doc_id").as("src"), col("label"))
-      val lb = labels.select(col("doc_id").as("dst"), col("label").as("label_b"))
-      val intra = edges.join(la, "src").join(lb, "dst")
-        .filter(col("label") === col("label_b"))
-        .groupBy(col("label")).agg((count(lit(1)) / 2).as("e_c"))
-      val deg = edges.join(la, "src")
-        .groupBy(col("label")).agg(count(lit(1)).as("d_c"))
-      val joined = deg.join(intra, Seq("label"), "left")
-        .crossJoin(broadcast(mDf))
-        .withColumn("q_c",
-          coalesce(col("e_c"), lit(0L)).cast("double") / col("m")
-            - (col("d_c").cast("double") / (lit(2) * col("m")))
-              * (col("d_c").cast("double") / (lit(2) * col("m"))))
-      joined
-        .select(col("label"), col("d_c").cast("bigint").as("degree_sum"),
-          coalesce(col("e_c"), lit(0L)).cast("bigint").as("intra_edges"),
-          round(col("q_c") * lit(1e6)).cast("bigint").as("q_c_e6"),
-          sum(round(col("q_c") * lit(1e6)).cast("bigint")).over(
-            org.apache.spark.sql.expressions.Window.partitionBy())
-            .cast("bigint").as("modularity_e6"))
-        .orderBy(col("label"))
-    }
+       |      - (CAST(deg.d_c AS DOUBLE) / (2 * m.m))
+       |        * (CAST(deg.d_c AS DOUBLE) / (2 * m.m))) * 1e6) AS BIGINT)) OVER ()
+       |    AS BIGINT) AS modularity_e6
+       |FROM deg LEFT JOIN intra ON deg.label = intra.label CROSS JOIN m
+       |ORDER BY deg.label""".stripMargin) { (s, dir) =>
+    val (edges, labels) = labelProp(QuerySpec.prepared(s, dir))
+    val mDf = edges.agg((count(lit(1)) / 2).as("m"))
+    val la = labels.select(col("doc_id").as("src"), col("label"))
+    val lb = labels.select(col("doc_id").as("dst"), col("label").as("label_b"))
+    val intra = edges.join(la, "src").join(lb, "dst")
+      .filter(col("label") === col("label_b"))
+      .groupBy(col("label")).agg((count(lit(1)) / 2).as("e_c"))
+    val deg = edges.join(la, "src")
+      .groupBy(col("label")).agg(count(lit(1)).as("d_c"))
+    val joined = deg.join(intra, Seq("label"), "left")
+      .crossJoin(broadcast(mDf))
+      .withColumn("q_c",
+        coalesce(col("e_c"), lit(0L)).cast("double") / col("m")
+          - (col("d_c").cast("double") / (lit(2) * col("m")))
+            * (col("d_c").cast("double") / (lit(2) * col("m"))))
+    joined
+      .select(col("label"), col("d_c").cast("bigint").as("degree_sum"),
+        coalesce(col("e_c"), lit(0L)).cast("bigint").as("intra_edges"),
+        round(col("q_c") * lit(1e6)).cast("bigint").as("q_c_e6"),
+        sum(round(col("q_c") * lit(1e6)).cast("bigint")).over(
+          org.apache.spark.sql.expressions.Window.partitionBy())
+          .cast("bigint").as("modularity_e6"))
+      .orderBy(col("label"))
   }
 
   /** Near-dup threshold sensitivity sweep — the tuning table a curation
@@ -1866,7 +1829,7 @@ object Dedup {
   /** One k=2 peel round: degree rollup + two semi-joins. `keep` is NOT
     * staged: both semi-joins consume the SAME degree rollup subtree,
     * whose exchange canonicalizes identically, so ReuseExchange
-    * computes it once per execution (r20; verified via the Profile job
+    * computes it once per execution (verified via the Profile job
     * ledger). */
   private[graft] def kCorePeel(edges: org.apache.spark.sql.DataFrame):
       org.apache.spark.sql.DataFrame = {
@@ -1878,6 +1841,18 @@ object Dedup {
       .join(keep.withColumnRenamed("doc_id", "a"), Seq("a"), "left_semi")
       .join(keep.withColumnRenamed("doc_id", "b"), Seq("b"), "left_semi")
   }
+
+  /** Six [[kCorePeel]] rounds from the staged edges `e0 (a, b)`, ONE
+    * materialization per round. Chaining two rounds per checkpoint
+    * (kCorePeel(kCorePeel(e))) measured net-negative (warm 2.95 →
+    * 3.38 s, cold 11.0 → 15.8 s at sf0.1): the chained inner round's
+    * un-shared semi-join probes re-evaluate 3× under the outer round's
+    * consumers and the per-round plan doubles in codegen size — more
+    * than the saved barrier buys. RankStatsSpec pins the
+    * chained≡sequential equality and the degree-rollup exchange reuse
+    * this round's shape relies on. */
+  private[graft] def kCore(e0: DataFrame): DataFrame =
+    Checkpoints.fixedRounds(e0, 6)(kCorePeel)
 
   val q325KCore: QuerySpec = {
     // AS MATERIALIZED (DuckDB-only text): each round references the
@@ -1902,24 +1877,9 @@ object Dedup {
          |FROM (SELECT a AS doc_id FROM e6 UNION ALL SELECT b FROM e6) n
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val sp = QuerySpec.prepared(s, dir)
-      var e = nearDupJaccard(sp)
+      val e = kCore(nearDupJaccard(sp)
         .select(col("doc_id_a").as("a"), col("doc_id_b").as("b"))
-        .staged
-      // ONE materialization per peel round. Chaining TWO rounds per
-      // checkpoint (kCorePeel(kCorePeel(e))) was tried in r21 (guide
-      // §2.4 fewer barriers) and measured NET-NEGATIVE in the isolated
-      // A/B (warm 2.95 → 3.38 s, cold 11.0 → 15.8 s at sf0.1): the
-      // chained inner round's un-shared semi-join probes re-evaluate 3×
-      // under the outer round's consumers and the per-round plan
-      // doubles in codegen size — more than the saved barrier buys.
-      // RankStatsSpec still pins the chained≡sequential equality and
-      // the degree-rollup exchange reuse (the ADVICE-r20 invariant this
-      // round's shape relies on).
-      for (_ <- 1 to 6) {
-        val peeled = kCorePeel(e).staged
-        Checkpoints.unpersist(e) // peeled is eager; the input round is dead
-        e = peeled
-      }
+        .staged)
       e.select(col("a").as("doc_id")).unionAll(e.select(col("b").as("doc_id")))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("core_deg"))
         .orderBy(col("doc_id"))
@@ -1989,8 +1949,8 @@ object Dedup {
     * independent by config in production), R = 3 fixed rounds (both
     * engines replay identically, the q97/q215 determinism rule); each
     * round one edge-keyed equi-join of the CURRENT frontier + one
-    * (landmark, node) min-dist rollup, state checkpointed per round
-    * with the superseded round released. Frontier ≤ K·n rows; no
+    * (landmark, node) min-dist rollup, state staged per round with the
+    * superseded round released ([[Checkpoints.fixedRounds]]). Frontier ≤ K·n rows; no
     * all-pairs anywhere. Distances score as exact integer micro-units
     * (1e6/d unrolled to literal CASE arms — no engine division). */
   val q395LandmarkBfs: QuerySpec = QuerySpec(
@@ -2038,17 +1998,15 @@ object Dedup {
       .staged
     val lm = sp.table("documents").filter(col("doc_id") % 25 === 0)
       .select(col("doc_id"))
-    var reach = lm.select(col("doc_id").as("l"), col("doc_id").as("v"),
-      lit(0).as("d")).staged
-    for (r <- 1 to 3) {
-      val frontier = reach.filter(col("d") === r - 1)
-      val expand = frontier.join(edges, col("v") === col("src"))
-        .select(col("l"), col("dst").as("v"), lit(r).as("d"))
-      val prev = reach
-      reach = reach.unionByName(expand)
-        .groupBy(col("l"), col("v")).agg(min(col("d")).as("d"))
-        .staged
-      Checkpoints.unpersist(prev)
+    val reach = Checkpoints.rounds(lm.select(col("doc_id").as("l"),
+        col("doc_id").as("v"), lit(0).as("d")).staged, 3)(Seq(_)) { (reach, i) =>
+      val expand = reach.filter(col("d") === i)
+        .join(edges, col("v") === col("src"))
+        .select(col("l"), col("dst").as("v"), lit(i + 1).as("d"))
+      Checkpoints.Round[DataFrame](reach.unionByName(expand)
+          .groupBy(col("l"), col("v")).agg(min(col("d")).as("d"))) {
+        (next, _) => (next, true)
+      }
     }
     reach.groupBy(col("v").as("doc_id"))
       .agg(sum(when(col("d") > 0, 1L).otherwise(0L)).as("n_landmarks"),

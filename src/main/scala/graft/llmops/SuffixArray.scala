@@ -3,7 +3,7 @@ package graft.llmops
 import graft.QuerySpec
 import graft.llmops.Checkpoints.Stageable
 import graft.operators.Prefix
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed suffix-array construction and the duplicate-text
@@ -79,8 +79,8 @@ object SuffixArray {
     * count after which ranks reflect the FULL suffix order for a
     * corpus whose longest document is `maxLen` words. THE one bound:
     * the build derives maxLen from the staged seed's max(pos)
-    * (observed on the seed's own checkpoint job — no separate probe
-    * execution, r21) and feeds it here; the spec pins the formula
+    * (probed on the seed's own staging job — no separate probe
+    * execution) and feeds it here; the spec pins the formula
     * directly. The r15 compile-time `Rounds = 7` was calibrated to the
     * 99-word fixture and would have silently under-ranked any corpus
     * with a >128-word document (ties beyond the cap left unresolved,
@@ -90,8 +90,6 @@ object SuffixArray {
   private[graft] def roundsForMaxLen(maxLen: Long): Int =
     math.max(SeedShift,
       64 - java.lang.Long.numberOfLeadingZeros(math.max(maxLen - 1L, 1L)))
-
-  import Checkpoints.obsLong
 
   /** Tokens with order-preserving dictionary ids: (doc_id, pos, wid)
     * where `wid` is the 1-based rank of the word in the SORTED distinct
@@ -135,10 +133,10 @@ object SuffixArray {
 
   /** [[suffixRanks]] over an EXPLICIT `(doc_id, text)` corpus. */
   private[graft] def suffixRanksOf(docs: DataFrame): DataFrame = {
-    // Round count and the round-0 active-set size both ride the seed's
-    // OWN checkpoint job as observed metrics (max(pos) IS the longest
-    // doc's word count — pos runs 1..len per doc): no separate
-    // aggregate-probe execution and no pre-loop isEmpty job (r21).
+    // Round count and the round-0 active-set size are both probed on the
+    // seed's OWN staging job (max(pos) IS the longest doc's word count —
+    // pos runs 1..len per doc): no separate aggregate-probe execution
+    // and no pre-loop isEmpty job.
     val (seed, maxLen, nActive) = seedRanks(docs)
     suffixRanks(seed, roundsForMaxLen(maxLen), nActive)
   }
@@ -165,52 +163,51 @@ object SuffixArray {
     // an unstaged child executes the collect_list window (the heaviest
     // per-token compute of the build) twice — once for the boundary
     // sketch, once for the shuffle. One checkpoint write is cheaper
-    // than re-sorting and re-collecting the corpus (r20).
+    // than re-sorting and re-collecting the corpus.
     val sufs = tokenIds(docs)
       .withColumn("pre", collect_list(col("wid")).over(wPre))
       .select(col("doc_id"), col("pos"), col("pre"))
       .staged
-    // maxLen (round-count bound) and the round-0 active size observed on
-    // the checkpoint job itself — two driver probes fused away (r21)
-    val obs = Observation()
     val (ranked, parts) = Prefix.globalRankTiesWithCountsStaged(
       sufs, Seq(col("pre")), "rank", "gs")
-    val seed = ranked
-      .select(col("doc_id"), col("pos"), col("rank"), col("gs"))
-      .observe(obs, max(col("pos")).as("__maxpos"),
-        sum(when(col("gs") > 1, 1L).otherwise(0L)).as("__nactive"))
-      .staged // read by the settled/active filters and every round's lookup
+    // read by the settled/active filters and every round's lookup; maxLen
+    // (the round-count bound) and the round-0 active size are probed on
+    // its own staging job
+    val (seed, p) = Checkpoints.stage(
+      ranked.select(col("doc_id"), col("pos"), col("rank"), col("gs")),
+      Seq(max(col("pos")).as("maxpos"),
+        sum(when(col("gs") > 1, 1L).otherwise(0L)).as("nactive")))
     Checkpoints.unpersist(sufs) // the ranked seed is eager; input is dead
     // the rank pass's internal range partition still carries the FULL
     // 2^SeedShift-id prefix arrays — the widest retained relation of
-    // the whole build; dead once the slim seed is eager (r21: ~0.5 GB
-    // per build left behind otherwise, compounding per query in a
+    // the whole build; dead once the slim seed is eager (~0.5 GB per
+    // build left behind otherwise, compounding per query in a
     // multi-query JVM / per release job on a long-lived cluster)
     Checkpoints.unpersist(parts)
-    (seed, obsLong(obs, "__maxpos", 1L), obsLong(obs, "__nactive", 0L))
+    (seed, p("maxpos", 1L), p("nactive", 0L))
   }
 
   private def suffixRanks(seed: DataFrame, rounds: Int,
                           nActive0: Long): DataFrame = {
     // Checkpoint ledger: every round's checkpoint holds rows that stay
-    // settled in it forever, so none is ever released; total storage
-    // is n + Σ|active_k| ≈ n·(1+ε), vs rounds·n for a re-rank-all
-    // loop. (A row re-ranked in round k+1 leaves its round-k copy
-    // dead, but dead mass is bounded by the same Σ|active|; per-round
-    // transients are released as soon as their successor materializes.)
-    var settled = seed.filter(col("gs") === 1)
-      .select(col("doc_id"), col("pos"), col("rank"))
-    var active = seed.filter(col("gs") > 1)
-      .select(col("doc_id"), col("pos"), col("rank"))
-    var nActive = nActive0 // maintained by each round's observed metric
-    var k = SeedShift // context 2^SeedShift already covered by the seed
-    while (k < rounds && nActive > 0) { // probe fused into the round's job
-      val shift = 1L << k
+    // settled in it forever, so the state reads every round and none is
+    // released; total storage is n + Σ|active_k| ≈ n·(1+ε), vs rounds·n
+    // for a re-rank-all loop. (A row re-ranked in round k+1 leaves its
+    // round-k copy dead, but dead mass is bounded by the same Σ|active|.)
+    val slim = Seq(col("doc_id"), col("pos"), col("rank"))
+    type State = (DataFrame, DataFrame) // (settled, active)
+    // the seed covers context 2^SeedShift; each round covers ×4 more
+    val cap = if (nActive0 > 0) (rounds - SeedShift + 1) / 2 else 0
+    val (settled, active) = Checkpoints.rounds[State](
+        (seed.filter(col("gs") === 1).select(slim: _*),
+          seed.filter(col("gs") > 1).select(slim: _*)), cap)(
+        s => Seq(s._1, s._2)) { case ((settled, active), i) =>
+      val shift = 1L << (SeedShift + 2 * i)
       // RADIX-4 round: the ranks 2^k, 2·2^k and 3·2^k words later attach
       // in ONE pass, so each round multiplies the resolved context by 4
       // — two doubling rounds fused into one driver-barrier execution
-      // (r21; guide §2.4 — the serial-round structure is the 100 TB
-      // bottleneck, each round a cluster-wide barrier). Correctness is
+      // (the serial-round structure is the 100 TB bottleneck, each
+      // round a cluster-wide barrier). Correctness is
       // the doubling argument applied twice inside one round: within a
       // tie block (identical first-2^k words), equal r2 means the two
       // +2^k suffixes share THEIR first 2^k words (same block), so r3
@@ -239,23 +236,15 @@ object SuffixArray {
           coalesce(max(when(col("__a") === 3, col("__r"))), lit(0L)).as("r4"))
       // joined is NOT staged: both consumers (the collapsed re-rank and
       // the join-back) sit in ONE query execution, where Spark's
-      // ReuseExchange shares the lookahead joins' shuffles (r20
-      // measurement; the r16 staging predated the single-execution
-      // shape). The next round's active size rides the checkpoint job
-      // as an observed metric — no per-round isEmpty execution (r21).
-      val obs = Observation()
-      val refined = joined
-        .join(refineBlocks(joined), Seq("r1", "r2", "r3", "r4"))
-        .select(col("doc_id"), col("pos"), col("rank"), col("gs"))
-        .observe(obs, sum(when(col("gs") > 1, 1L).otherwise(0L)).as("__na"))
-        .staged
-      settled = settled.unionByName(
-        refined.filter(col("gs") === 1)
-          .select(col("doc_id"), col("pos"), col("rank")))
-      active = refined.filter(col("gs") > 1)
-        .select(col("doc_id"), col("pos"), col("rank"))
-      nActive = obsLong(obs, "__na", 0L)
-      k += 2 // context ×4 per round
+      // ReuseExchange shares the lookahead joins' shuffles. The next
+      // round's active size is probed on the round's staging job.
+      Checkpoints.Round[State](
+          joined.join(refineBlocks(joined), Seq("r1", "r2", "r3", "r4"))
+            .select(col("doc_id"), col("pos"), col("rank"), col("gs")),
+          sum(when(col("gs") > 1, 1L).otherwise(0L)).as("na")) { (refined, p) =>
+        ((settled.unionByName(refined.filter(col("gs") === 1).select(slim: _*)),
+          refined.filter(col("gs") > 1).select(slim: _*)), p("na", 0L) > 0)
+      }
     }
     settled.unionByName(active)
   }
@@ -274,7 +263,7 @@ object SuffixArray {
     * only a map-side-combined groupBy here and an AQE-splittable
     * equi-join back in the caller. Generalized over however many
     * `r<i>` lookahead columns ride `joined` (the radix-4 round passes
-    * three, r21); the window ordering is the lexicographic composite,
+    * three); the window ordering is the lexicographic composite,
     * which IS iterated doubling — see the loop comment.
     * SuffixArraySpec pins the collapse (the window's input is the
     * aggregate, row count = distinct pairs) against a 30%-skew
@@ -318,7 +307,7 @@ object SuffixArray {
     * 3× fewer barriers than doubling — while the geometric-series bound
     * on words shipped per surviving pair only moves from 4·L to
     * (8/7)·8·L ≈ 9·L, still O(L) and still paid ONLY by the deep-repeat
-    * survivors (r20: 3 chunk rounds → 2 at sf0.1). */
+    * survivors (3 chunk rounds → 2 at sf0.1). */
   private val LcpGrowth = 8
 
   /** `(idx, doc_a, pos_a, doc_b, pos_b, lcp)` for adjacent SA pairs.
@@ -350,22 +339,20 @@ object SuffixArray {
     // the tiny boundary stitch — the r15 shape (globalRank → checkpoint
     // → two-arm self-join on idx = idx+1) cost two extra corpus shuffles
     // and a checkpoint for the same n−1 pairs.
-    // the untied-pair count rides adj's own staging job as an observed
-    // metric, so the chunk loop needs no round-0 staging/probe of its
-    // own — the untied branch is a cheap filter re-scan of this
-    // checkpoint (r21; replaces one execution + one retained checkpoint)
-    val obs = Observation()
     val (adjRaw, adjParts) = Prefix.adjacentBySortStaged(
       suffixRanksOf(docs).select(col("rank"), col("doc_id"), col("pos")),
       Seq(col("rank"), col("doc_id"), col("pos")), "idx")
-    val adj = adjRaw
-      .select(col("idx"), col("a.rank").as("rank_a"),
+    // the tied and untied branches below both read adj; the untied-pair
+    // count is probed on its own staging job, so the chunk loop needs no
+    // round-0 staging of its own — the untied branch is a cheap filter
+    // re-scan of this checkpoint
+    val (adj, p) = Checkpoints.stage(
+      adjRaw.select(col("idx"), col("a.rank").as("rank_a"),
         col("a.doc_id").as("doc_a"), col("a.pos").as("pos_a"),
         col("b.rank").as("rank_b"),
-        col("b.doc_id").as("doc_b"), col("b.pos").as("pos_b"))
-      .observe(obs, sum(when(col("rank_a") =!= col("rank_b"), 1L)
-        .otherwise(0L)).as("__nuntied"))
-      .staged // the tied and untied branches below both read it
+        col("b.doc_id").as("doc_b"), col("b.pos").as("pos_b")),
+      Seq(sum(when(col("rank_a") =!= col("rank_b"), 1L).otherwise(0L))
+        .as("nuntied")))
     Checkpoints.unpersist(adjParts) // pairs are eager; the range copy is dead
     // EQUAL final rank ⟺ IDENTICAL suffixes (the doubling resolves every
     // real difference, and the rank-0 end sentinel strictly orders a
@@ -391,7 +378,7 @@ object SuffixArray {
     val untied = adj.filter(col("rank_a") =!= col("rank_b"))
       .select(col("idx"), col("doc_a"), col("pos_a"), col("doc_b"),
         col("pos_b"))
-    chunkedLcp(docs, untied, obsLong(obs, "__nuntied", 0L))
+    chunkedLcp(docs, untied, p("nuntied", 0L))
       .unionByName(tied)
   }
 
@@ -409,9 +396,9 @@ object SuffixArray {
     * at the (doc, pos) grain (one row per token, like every n-gram
     * operator here), so no single doc's boilerplate pins a task; the
     * doc-level left_semi prune keeps later rounds from re-exploding
-    * the whole corpus. The per-round active count rides each round's
-    * checkpoint job as an observed metric (no isEmpty executions);
-    * `n0` is pairs0's row count, observed by the caller on the staging
+    * the whole corpus. The per-round active count is probed on each
+    * round's staging job (no isEmpty executions);
+    * `n0` is pairs0's row count, probed by the caller on the staging
     * job pairs0 filters — pairs0 itself must be cheap to re-scan (it is
     * a filter over the caller's adjacency checkpoint), because round 1
     * reads it three times (join probe + both arms' doc prunes).
@@ -434,43 +421,37 @@ object SuffixArray {
         .select(col(s"doc_$arm"), (col("p0") + 1).cast("long").as(s"pos_$arm"),
           expr(s"slice(w, p0 + 1 + $off, $len)").as(out))
     }
-    var active = pairs0
-    var nActive = n0
-    val resolved = List.newBuilder[DataFrame]
-    var off = 0L
-    var len = LcpChunk
-    while (nActive > 0) { // probe fused into each round's checkpoint job
-      // ONE slim materialization per round: keys + the resolved lcp
-      // (NULL ⇔ chunk-equal and not ended ⇔ still active). The wide
-      // ca/cb chunk arrays are projected away BEFORE the checkpoint, so
-      // the lazy done/next filters below re-scan only slim rows — the
-      // r16 fusion that measured 55% slower checkpointed the CHUNKY
-      // relation and re-scanned the arrays per read; staging the slim
-      // projection keeps that fix while dropping two of the three
-      // per-round materializations (r20). Ledger: each round's step is
-      // read by the next round's filters AND by the final union, so
-      // steps stay persisted until the build completes — total retained
-      // mass is Σ|active_k| slim rows, the same shrinking-active-set
-      // envelope as the rank loop's settled argument.
-      val obs = Observation()
-      val step = active
-        .join(chunkOf(active, "a", off, len, "ca"), Seq("doc_a", "pos_a"))
-        .join(chunkOf(active, "b", off, len, "cb"), Seq("doc_b", "pos_b"))
-        .withColumn("__p", p)
-        .select(keys :+ when(col("__p") > 0, lit(off) + col("__p") - 1)
-          .when(size(col("ca")) < len && size(col("cb")) < len,
-            // both suffixes end inside this chunk: min-length cutoff
-            lit(off) + least(size(col("ca")), size(col("cb"))))
-          .cast("long").as("lcp"): _*)
-        .observe(obs, sum(when(col("lcp").isNull, 1L).otherwise(0L)).as("__na"))
-        .staged
-      resolved += step.filter(col("lcp").isNotNull)
-      active = step.filter(col("lcp").isNull).select(keys: _*)
-      nActive = obsLong(obs, "__na", 0L)
-      off += len
-      len *= LcpGrowth
+    // (active pairs, resolved steps, words compared so far, chunk length)
+    type State = (DataFrame, List[DataFrame], Long, Int)
+    // ONE slim materialization per round: keys + the resolved lcp (NULL
+    // ⇔ chunk-equal and not ended ⇔ still active). The wide ca/cb chunk
+    // arrays are projected away BEFORE the checkpoint, so the lazy
+    // done/next filters re-scan only slim rows (checkpointing the CHUNKY
+    // relation re-scanned the arrays per read and measured 55% slower).
+    // Ledger: each round's step is read by the next round's filters AND
+    // by the final union, so the state reads every step until the build
+    // completes — total retained mass is Σ|active_k| slim rows, the same
+    // shrinking-active-set envelope as the rank loop's settled argument.
+    val (_, resolved, _, _) = Checkpoints.rounds[State](
+        (pairs0, Nil, 0L, LcpChunk), if (n0 > 0) Int.MaxValue else 0)(
+        _._2) { case ((active, resolved, off, len), _) =>
+      Checkpoints.Round[State](
+          active
+            .join(chunkOf(active, "a", off, len, "ca"), Seq("doc_a", "pos_a"))
+            .join(chunkOf(active, "b", off, len, "cb"), Seq("doc_b", "pos_b"))
+            .withColumn("__p", p)
+            .select(keys :+ when(col("__p") > 0, lit(off) + col("__p") - 1)
+              .when(size(col("ca")) < len && size(col("cb")) < len,
+                // both suffixes end inside this chunk: min-length cutoff
+                lit(off) + least(size(col("ca")), size(col("cb"))))
+              .cast("long").as("lcp"): _*),
+          sum(when(col("lcp").isNull, 1L).otherwise(0L)).as("na")) { (step, probes) =>
+        ((step.filter(col("lcp").isNull).select(keys: _*),
+          resolved :+ step.filter(col("lcp").isNotNull), off + len,
+          len * LcpGrowth), probes("na", 0L) > 0)
+      }
     }
-    resolved.result() match {
+    resolved match {
       case Nil => pairs0.withColumn("lcp", lit(0L)).filter(lit(false))
       case parts => parts.reduce(_.unionByName(_))
     }

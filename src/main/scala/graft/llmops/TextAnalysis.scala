@@ -955,8 +955,8 @@ object TextAnalysis {
   /** Greedy BPE encode over a `(word, n)` vocab with an ARBITRARY
     * `(pair, rank)` merge table — the static literal (q167/q176) or the
     * q401-trained artifact (q406): `rounds` broadcast-join rounds,
-    * per-round localCheckpoint with superseded-state release
-    * ([[Checkpoints]]). Per word per round, the LOWEST-rank pair present
+    * staged per round with superseded-state release
+    * ([[Checkpoints.fixedRounds]]). Per word per round, the LOWEST-rank pair present
     * in the sentinel-spaced symbol string is replaced at every
     * occurrence (left-to-right non-overlapping — the trainer's own
     * parity). Returns the final `(word, n, seq)` state. */
@@ -966,7 +966,7 @@ object TextAnalysis {
       mdf: org.apache.spark.sql.DataFrame,
       rounds: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, explode, expr, min, struct, when}
-    var state = vocab
+    val seeded = vocab
       // position-based seeds (callers filter word != '' — sequence(1, 0)
       // throws): identical characters to the DuckDB oracle's word[i] and
       // to [[bpeEncodeExpr]]'s substr seeds, newlines included — a regexp
@@ -974,7 +974,9 @@ object TextAnalysis {
       .selectExpr("word", "n",
         "concat(' ', concat_ws('  ', transform(sequence(1, length(word)), i -> substring(word, i, 1))), ' ') AS seq")
       .staged
-    for (_ <- 1 to rounds) {
+    // staged per round: state is consumed by BOTH the applicable-join and
+    // the next round, and it is vocabulary-sized
+    Checkpoints.fixedRounds(seeded, rounds) { state =>
       // per word: the lowest-rank merge-table pair present in its
       // current symbol sequence (broadcast join, vocab-sized)
       val applicable = state
@@ -987,21 +989,13 @@ object TextAnalysis {
         .join(broadcast(mdf), "pair")
         .groupBy("word").agg(min(struct(col("rank"), col("pair"))).as("mp"))
         .select(col("word"), col("mp.pair").as("pair"))
-      // checkpoint per round: keeps the plan linear (state is consumed
-      // by BOTH the applicable-join and the next round) and the state
-      // is vocabulary-sized; the superseded round's blocks are released
-      // so storage stays O(1) in the round count ([[Checkpoints]])
-      val next = state.join(applicable, Seq("word"), "left")
+      state.join(applicable, Seq("word"), "left")
         .withColumn("seq", when(col("pair").isNull, col("seq"))
           .otherwise(expr(
             """replace(seq, concat(' ', replace(pair, ' ', '  '), ' '),
               |             concat(' ', replace(pair, ' ', ''), ' '))""".stripMargin)))
         .select("word", "n", "seq")
-        .staged
-      Checkpoints.unpersist(state)
-      state = next
     }
-    state
   }
 
   /** Stateless greedy BPE ENCODE of one word as a SINGLE expression —

@@ -1,13 +1,16 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.time.SpanSugar._
 
 /** Pins the distributed BPE trainer (llmops.BpeTokenizer): greedy
   * left-to-right overlap parity, the deterministic tie-break, the
   * empty-winner stop, and the invariant that the symbol table always
   * re-concatenates to the original words — the properties the q401
   * DuckDB oracle relies on matching bit-for-bit. */
-class BpeSpec extends EngineSuite {
+class BpeSpec extends EngineSuite with BoundedTests {
+  def testLimit = 3.minutes
+
 
   /** A session whose `documents` view is the given (doc_id, text)
     * rows — isolated temp-view registry, shared SparkContext. */

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.time.SpanSugar._
 
 /** Pins the distributed suffix-array construction (llmops.SuffixArray):
   * the prefix-doubling ranks must reproduce the DIRECT lexicographic
@@ -10,7 +11,9 @@ import org.apache.spark.sql.functions._
   * word-arrays with a plain rank window (fine in a test; the
   * production path never does this — that is the point of the
   * doubling). */
-class SuffixArraySpec extends EngineSuite {
+class SuffixArraySpec extends EngineSuite with BoundedTests {
+  def testLimit = 3.minutes
+
 
   test("prefix-doubling ranks == direct lexicographic suffix sort, ties included") {
     val sp = QuerySpec.prepared(spark, sfDir)
